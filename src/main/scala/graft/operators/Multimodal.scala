@@ -671,25 +671,9 @@ object Multimodal {
     // is replicated per reference and runs ~6× per execution (measured
     // r20: q176 15.7 s → one-decode plan; 6 longs/clip is the cheapest
     // thing in the pipeline to materialize, blobs stay upstream).
-    val sigsRaw = hashes.select(col("media_id").as("id"), col("phash").as("sig"),
+    val sigs = hashes.select(col("media_id").as("id"), col("phash").as("sig"),
       col("b0"), col("b1"), col("b2"), col("b3"))
-      .transform(graft.plans.Iterative.cut)
-    // Right-size the landed leaf the way AQE sizes post-shuffle stages:
-    // the cut just materialized an EXACT row count, and the decode fan-out
-    // upstream leaves parallelism-many partitions regardless of how small
-    // the signature frame is — every job of the CC loop downstream would
-    // then schedule that many tasks over a few-KB frame (measured r20:
-    // q171 2.3 → 4.0 s from leaf task overhead alone). 48 B/row against
-    // the session's advisory partition size keeps the coalesce
-    // scale-adaptive: 5 k clips → 1 partition, 1 B clips → hundreds.
-    val advisory = math.max(1L, hashes.sparkSession.sessionState.conf
-      .getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-    val target = sigsRaw.queryExecution.analyzed.stats.rowCount
-      .map(r => ((r.toLong * 48 + advisory - 1) / advisory).max(1L).min(10000L).toInt)
-    val sigs = target match {
-      case Some(t) if t < sigsRaw.rdd.getNumPartitions => sigsRaw.coalesce(t)
-      case _ => sigsRaw
-    }
+      .transform(graft.plans.Iterative.cutSized)
     val groups = sigs.filter(col("sig").isNotNull)
       .groupBy("sig").agg(min("id").as("rid"))
     val pairs = graft.operators.NearDup.signaturePairs(

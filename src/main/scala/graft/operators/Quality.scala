@@ -708,29 +708,12 @@ object Quality {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val spark = docs.sparkSession
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    var dict = graft.plans.Iterative.cut(wordFreq(docs, textCol).select(
+    // the sized partition count survives the loop's re-checkpoints:
+    // replace is a narrow projection
+    var dict = graft.plans.Iterative.cutSized(wordFreq(docs, textCol).select(
       concat(lit(sep),
         array_join(regexp_extract_all(col("w"), lit("(?s)."), lit(0)), sep + sep),
         lit(sep)).as("seq"), col("f")))
-    // Right-size the landed dictionary the way phashDedup sizes its
-    // signature leaf: the vocabulary-bounded frame materializes with the
-    // word-count aggregation's shuffle-partition count, and EVERY merge
-    // round's pair-count job (plus each periodic re-checkpoint) then
-    // schedules that many tasks over what is usually a few-hundred-KB
-    // dictionary — measured q142 at sf0.1: ~65 rounds × 32 tasks over 500
-    // rows, ~16 s of pure task overhead. The cut just produced EXACT
-    // statistics, so the coalesce target derives from real size vs the
-    // session's advisory partition size (scale-adaptive: a 1e9-word dict
-    // keeps hundreds of partitions); the narrowed count propagates through
-    // the re-checkpoints because replace is a narrow projection.
-    locally {
-      val advisory = math.max(1L, spark.sessionState.conf.getConf(
-        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-      val stats = dict.queryExecution.analyzed.stats
-      val target = ((stats.sizeInBytes + advisory - 1) / advisory)
-        .max(1).min(10000).toInt
-      if (target < dict.rdd.getNumPartitions) dict = dict.coalesce(target)
-    }
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, String, Long)]
     var sinceCheckpoint = 0

@@ -414,13 +414,14 @@ object Summaries {
   private def floor_(c: Column): Column = org.apache.spark.sql.functions.floor(c)
 
   /** Single-row completeness summary: for each column, fraction non-null
-    * (4 dp). One pass, one partial-aggregable plan.
+    * (4 dp). One pass, one partial-aggregable plan. A zero-row input
+    * gives one row of NULL ratios.
     */
   def completeness(df: DataFrame, cols: Seq[String]): DataFrame = {
     // raw double division (no rounding): bit-identical across engines,
     // order-independent — safe for exact result comparison
     val aggs = cols.map { c =>
-      (count(col(c)).cast("double") / count(lit(1))).as(s"${c}_complete")
+      try_divide(count(col(c)).cast("double"), count(lit(1))).as(s"${c}_complete")
     }
     df.agg(aggs.head, aggs.tail.toIndexedSeq: _*)
   }
@@ -864,8 +865,8 @@ object Summaries {
     */
   def completenessNonEmpty(df: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs = cols.map { c =>
-      (count(when(col(c).isNotNull && length(trim(col(c).cast("string"))) > 0, 1))
-        .cast("double") / count(lit(1))).as(s"${c}_complete")
+      try_divide(count(when(col(c).isNotNull && length(trim(col(c).cast("string"))) > 0, 1))
+        .cast("double"), count(lit(1))).as(s"${c}_complete")
     }
     df.agg(aggs.head, aggs.tail.toIndexedSeq: _*)
   }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.internal.SQLConf
 
 /** Plan utilities for ITERATIVE DataFrame algorithms (CC loops,
   * PageRank rounds, fold-the-output-back-in ingest chains).
@@ -30,4 +31,24 @@ object Iterative {
     */
   def cutCounting(df: DataFrame, flagCol: String): (DataFrame, Long) =
     org.apache.spark.sql.graftglue.StatsSafeCheckpoint.counting(df, flagCol)
+
+  /** [[cut]], then coalesce the landed leaf to the partition count its
+    * EXACT size asks for: ceil(sizeInBytes / the session's advisory
+    * partition size), clamped to [1, 10000], applied only when that is
+    * fewer partitions than the leaf has. A small frame landed from a
+    * wide upstream otherwise keeps the upstream's partition count, and
+    * every later job over it schedules that many tasks for a few KB
+    * (measured r20: q171 2.3 → 4.0 s from leaf task overhead alone;
+    * r21: q142's ~65 merge rounds × 32 tasks over a 500-row dictionary,
+    * ~16 s). The cut's statistics are exact, so the target scales with
+    * the data: a large frame keeps hundreds of partitions.
+    */
+  def cutSized(df: DataFrame): DataFrame = {
+    val landed = cut(df)
+    val advisory = math.max(1L, landed.sparkSession.sessionState.conf
+      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    val size = landed.queryExecution.analyzed.stats.sizeInBytes
+    val target = ((size + advisory - 1) / advisory).max(1).min(10000).toInt
+    if (target < landed.rdd.getNumPartitions) landed.coalesce(target) else landed
+  }
 }

@@ -44,13 +44,18 @@ object StatsSafeCheckpoint {
     * convergence probe ("did anything change this round?") without its
     * own follow-up job. The count is result-based (summed per-partition
     * tuples, not an accumulator), so task retries cannot inflate it.
+    * `flagCol` resolves with the session's resolver and must match
+    * exactly one column.
     */
   def counting(df: DataFrame, flagCol: String): (DataFrame, Long) = {
-    val ord = df.asInstanceOf[Dataset[Row]].queryExecution.analyzed.output
-      .indexWhere(_.name == flagCol)
-    require(ord >= 0, s"StatsSafeCheckpoint.counting: no column '$flagCol'")
-    val (out, flagged) = apply(df, Some(ord))
-    (out, flagged)
+    val ds = df.asInstanceOf[Dataset[Row]]
+    val output = ds.queryExecution.analyzed.output
+    val resolver = ds.sparkSession.sessionState.conf.resolver
+    val ords = output.indices.filter(i => resolver(output(i).name, flagCol))
+    require(ords.nonEmpty, s"StatsSafeCheckpoint.counting: no column '$flagCol'")
+    require(ords.size == 1, s"StatsSafeCheckpoint.counting: column '$flagCol'" +
+      s" is ambiguous, it matches ${ords.map(output(_).name).mkString(", ")}")
+    apply(df, Some(ords.head))
   }
 
   private def apply(df: DataFrame, flagOrdinal: Option[Int]): (DataFrame, Long) = {

@@ -127,6 +127,12 @@ class OperatorsSpec extends SparkSpec {
     val out = Summaries.completeness(df, Seq("x", "y")).collect()(0)
     assert(out.getAs[Double]("x_complete") === 0.5)
     assert(out.getAs[Double]("y_complete") === 0.5)
+    // zero rows: one row of NULL ratios, not an ANSI divide-by-zero
+    for (f <- Seq(Summaries.completeness _, Summaries.completenessNonEmpty _)) {
+      val empty = f(df.limit(0), Seq("x", "y")).collect()
+      assert(empty.length === 1)
+      assert(empty(0).isNullAt(0) && empty(0).isNullAt(1))
+    }
   }
 
   test("topKPerKey returns k rows per group in rank order") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.internal.SQLConf
 import graft.operators.Dedup
 import graft.plans.Iterative
 
@@ -47,5 +48,38 @@ class StatsSafeSpec extends SparkSpec {
     assert(cut.schema == df.schema)
     assert(cut.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
       Set((1L, "a"), (2L, null), (3L, "c")))
+  }
+
+  test("cutSized lands a tiny frame as one partition, else as cut") {
+    import spark.implicits._
+    val df = (1 to 50).map(i => (i.toLong, if (i % 7 == 0) null else s"v$i"))
+      .toDF("id", "v").repartition(8)
+    def rowsOf(d: DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    val cut = Iterative.cut(df)
+    val sized = Iterative.cutSized(df)
+    assert(cut.rdd.getNumPartitions == 8)
+    assert(sized.rdd.getNumPartitions == 1)
+    assert(sized.schema == cut.schema)
+    assert(rowsOf(sized) == rowsOf(cut))
+    // a 1-byte advisory size puts the target above 8 partitions: untouched
+    val wide = Sessions.withConf(spark, SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key -> "1") {
+      Iterative.cutSized(df)
+    }
+    assert(wide.rdd.getNumPartitions == 8)
+    assert(rowsOf(wide) == rowsOf(cut))
+  }
+
+  test("cutCounting resolves flagCol to exactly one column") {
+    import spark.implicits._
+    val df = Seq((1L, true, false), (2L, false, false)).toDF("id", "changed", "CHANGED")
+    val missing = intercept[IllegalArgumentException](Iterative.cutCounting(df, "nope"))
+    assert(missing.getMessage.contains("StatsSafeCheckpoint.counting: no column 'nope'"))
+    val ambiguous = intercept[IllegalArgumentException](Iterative.cutCounting(df, "changed"))
+    assert(ambiguous.getMessage.contains("ambiguous"))
+    // one case-variant match resolves the way the analyzer would
+    val one = Seq((1L, true), (2L, false)).toDF("id", "changed")
+    val (_, flagged) = Iterative.cutCounting(one, "Changed")
+    assert(flagged == 1L)
   }
 }

@@ -50,6 +50,9 @@ def reshard(sf_dir: str, parts: int, backup_dir: str, tables) -> None:
             continue
         orig = pq.read_table(path)
         n = orig.num_rows
+        if n == 0:
+            print(f"skip {name}: zero rows")
+            continue
         k = min(parts, max(1, n // MIN_ROWS_PER_PART))
         tmp = path + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
